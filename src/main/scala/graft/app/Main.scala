@@ -3,7 +3,6 @@ package graft.app
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Article
-import graft.ner.{AliasTrieScorer, OnnxTokenScorer, TokenScorer}
 import graft.pipeline.KgPipeline
 
 /** Production entrypoint — the spark-submit driver of the north rule.
@@ -16,13 +15,14 @@ import graft.pipeline.KgPipeline
   *   newsagencyclassificationspark.jar \
   *   --input  <web-pages table path (url, warc_ts, html, text, lang, tp)> \
   *   --output <graph output root> \
-  *   [--buckets 256] [--model /path/model.onnx] [--synth N]
+  *   [--buckets 256] [--synth N]
   * }}}
   *
   * The run is resumable: re-submitting with the same `--output` skips
   * buckets recorded in `<output>/_manifest` (per-partition lineage +
   * mention/triple counts). `--synth N` generates the deterministic
-  * benchmark corpus instead of reading `--input` (smoke/perf runs).
+  * benchmark corpus instead of reading `--input` (smoke/perf runs). Any
+  * other flag is refused at parse time.
   */
 object Main {
 
@@ -46,26 +46,26 @@ object Main {
           spark.sparkContext.defaultParallelism * 4)
         case None => spark.read.parquet(opts("input")).as[Article]
       }
-    val scorer: TokenScorer = opts.get("model") match {
-      case Some(path) => new OnnxTokenScorer(path)
-      case None => new AliasTrieScorer
-    }
     val buckets = opts.getOrElse("buckets", "256").toInt
     val out = opts("output")
 
-    val stats = KgPipeline.runResumable(articles, out, buckets, scorer)
+    val stats = KgPipeline.runResumable(articles, out, buckets)
     val done = KgPipeline.manifest(spark, out)
     println(s"[graft] processed ${stats.length} buckets this run; manifest:")
     done.orderBy("bucket").show(buckets, truncate = false)
     spark.stop()
   }
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
+  private val Flags = Set("input", "output", "buckets", "synth")
+
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       args(i) match {
         case flag if flag.startsWith("--") && i + 1 < args.length =>
+          require(Flags(flag.drop(2)), s"unknown flag $flag; accepted: " +
+            Flags.toSeq.sorted.map("--" + _).mkString(" "))
           m += flag.drop(2) -> args(i + 1); i += 2
         case other =>
           throw new IllegalArgumentException(s"unexpected argument: $other")

@@ -208,30 +208,7 @@ object ConnectedComponents {
     *                of the 20M ladder slowed 19→121 s while rounds 1-15
     *                held ~17 s). Default no-op; must not touch the loop's
     *                DataFrames.
-    * @param hops    label-indirection hops per round: hop k replaces each
-    *                node's pointer with the label table read through it
-    *                (`component := label^k(component)`). Each extra hop
-    *                costs one label-sized join in the same round job
-    *                (lookup side exchange-free against the
-    *                node-partitioned checkpoint) and pays off only if it
-    *                cuts the ROUND count. Output is hop-invariant (every
-    *                hop is a monotone step toward the same min-label
-    *                fixpoint, and `changed` compares against the
-    *                pre-round labels either way). MEASURED NEGATIVE at
-    *                the default (BENCH.md round 7, 20M/32c): hops=2
-    *                finished the planted chains 3 rounds sooner but the
-    *                TOTAL round count stayed 21 — on random-id graphs
-    *                the supercritical component's tail is bounded by the
-    *                min-id node's eccentricity (label propagation moves
-    *                one edge-hop per round; compression only shortcuts
-    *                pointer chains that happen to align with geometry,
-    *                which random ids don't) — so the extra join was pure
-    *                cost (455.8 vs 333.5 s). Chains compress in
-    *                O(log d) precisely because their ids are monotone
-    *                along the path. Leave at 1 unless the graph's ids
-    *                correlate with its geometry.
-    */
-  /** @param smallSolve force (Some(true)) or suppress (Some(false)) the
+    * @param smallSolve force (Some(true)) or suppress (Some(false)) the
     *                single-task union-find fast path; None (default)
     *                auto-gates on the symmetrized table's materialized
     *                partition count ([[SmallSolveMaxPartitions]]) — and
@@ -245,10 +222,8 @@ object ConnectedComponents {
     *                shapes). */
   def runCounted(edges: DataFrame, maxIter: Int = 30,
       onRound: (Int, Long, Double) => Unit = (_, _, _) => (),
-      hops: Int = 1,
       smallSolve: Option[Boolean] = None)
       : (DataFrame, Int) = {
-    require(hops >= 1, s"hops must be >= 1, got $hops")
     // ALL loop checkpoints use the LEAN wrapper (no originStats/
     // originConstraints): the default wrapper carries the pre-checkpoint
     // plan's size estimate, which the size-only visitor MULTIPLIES
@@ -317,18 +292,12 @@ object ConnectedComponents {
       // pointer doubling FIRST, against the checkpointed label table (both
       // branches of the self-join read materialized data, so no extra
       // materialization pass is needed): component := label(component),
-      // then `hops - 1` further reads through the same table — each a
-      // label-sized join whose lookup side is exchange-free (the rename
+      // a label-sized join whose lookup side is exchange-free (the rename
       // keeps the node-partitioned checkpoint's layout)
-      var compressed = labels
+      val compressed = labels
         .join(labels.select(col("node").as("component"),
           col("component").as("_cc2")), Seq("component"), "left")
         .select(col("node"), col("component").as("_old"),
-          coalesce(col("_cc2"), col("component")).as("component"))
-      for (_ <- 2 to hops) compressed = compressed
-        .join(labels.select(col("node").as("component"),
-          col("component").as("_cc2")), Seq("component"), "left")
-        .select(col("node"), col("_old"),
           coalesce(col("_cc2"), col("component")).as("component"))
       // each node's best incoming proposal: min label among its neighbors
       val proposals = sym

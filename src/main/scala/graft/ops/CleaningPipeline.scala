@@ -1,10 +1,12 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.pipeline.Stages
 
 /** The composed corpus-cleaning pipeline a training-data user actually
   * runs — `decontaminate → exact dedup → near-dup dedup → (optionally)
@@ -21,12 +23,10 @@ import org.apache.spark.sql.functions._
   * stage after that exchanges ids, hashes, and shingle/signature arrays —
   * never text.
   *
-  * Staging is an EAGER `localCheckpoint` (executor memory with disk
-  * spill): lazy materialization could let two downstream branches race
-  * into the text scan concurrently and read it twice. The staged artifact
-  * is about the size of the shingle sets (≈ corpus text); a deployment
-  * whose cleaning chain spans multiple jobs would stage the same frame to
-  * parquet instead — every hook here ([[Dedup.bandRowsFromSigs]],
+  * The staged projection lives at rest, as parquet under a stage
+  * directory, and every stage persists its (id-only, tiny) output, so a
+  * crashed chain RESUMES from the last committed stage without
+  * re-scanning corpus text. Every hook here ([[Dedup.bandRowsFromSigs]],
   * [[Dedup.jaccardVerifyOnShingles]],
   * [[Decontaminate.contaminationReportOnShingles]]) takes any
   * `(doc_id, …)` table, however persisted.
@@ -45,176 +45,27 @@ import org.apache.spark.sql.functions._
   *     shingle sets into a persisted [[SignatureStore]] so future
   *     incremental batches dedup against the cleaned corpus.
   *
-  * Note this is a pipeline, not a pure plan builder: the staging
-  * checkpoint and the connected-components loop run Spark jobs when
-  * called.
+  * Note this is a pipeline, not a pure plan builder: the stages and the
+  * connected-components loop run Spark jobs when called.
   */
 object CleaningPipeline {
 
-  /** Surviving `(doc_id, keepCols…)` rows of the cleaning chain. The
-    * output is metadata-only by design — joining text back in is the
-    * caller's write-side concern ([[clean]]) and the only place a second
-    * text scan can occur. */
-  /** `allowStoreReplay`: a RE-RUN of the same cleaning job after its
-    * store append already committed re-appends the same survivors —
-    * with strict monotone checking the retry refuses on the watermark.
-    * Pass true for an idempotent re-run (the store's windowed replay
-    * gate still refuses genuinely misnumbered ids; duplicate rows are
-    * probe-tolerated and compactable). */
-  def cleanedMeta(
-      docs: DataFrame,
-      bench: DataFrame,
-      keepCols: Seq[String] = Nil,
-      k: Int = 32,
-      bands: Int = 8,
-      shingleN: Int = 3,
-      maxBucket: Int = 64,
-      minJaccard: Double = 0.8,
-      minOverlap: Int = 5,
-      minRatio: Double = 0.0,
-      broadcastBench: Boolean = true,
-      storePath: Option[String] = None,
-      allowStoreReplay: Boolean = false
-  ): DataFrame = {
-    val spark = docs.sparkSession
-    // the store's banding must equal the pipeline's or the appended rows
-    // would never collide with future probes — check BEFORE doing work
-    storePath.foreach { p =>
-      val m = SignatureStore.readMeta(spark, p)
-      require(m.k == k && m.bands == bands && m.shingleN == shingleN,
-        s"store $p has (k=${m.k}, bands=${m.bands}, shingleN=${m.shingleN})" +
-          s" but the pipeline runs (k=$k, bands=$bands, shingleN=$shingleN)" +
-          " — appending differently-banded signatures would silently miss" +
-          " every future near-duplicate")
-    }
-    val keep = keepCols.map(col)
-    // THE text pass: hash + shingles + signature in one projection. The
-    // shingle sets carry the at-rest HASHED representation
-    // ([[Dedup.hashShingles]]): every consumer below (decontamination
-    // overlap counts, Jaccard verify, the store append) is
-    // cardinality-arithmetic over the sets, which hashing preserves,
-    // and the staged artifact drops ~2.5× in bytes.
-    val staged = docs.select(
-      Seq(col("doc_id")) ++ keep ++ Seq(
-        md5(col("text").cast("binary")).as("_h"),
-        Dedup.hashShingles(
-          Dedup.distinctShingles(col("text"), shingleN)).as("sh"),
-        Dedup.minhashSignature(col("text"), k, shingleN).as("sig")): _*)
-      .localCheckpoint()
+  /** One `_manifest` row of the resumable chain. */
+  final case class StageStat(stage: Int, rows: Long, wall_ms: Long)
 
-    // stage 1: decontamination over the staged shingle sets
-    val flagged = Decontaminate.contaminationReportOnShingles(
-        staged.select(col("doc_id"), col("sh")), bench, shingleN,
-        minOverlap, minRatio, broadcastBench)
-      .select(col("doc_id")).distinct()
-    val r1 = staged.join(flagged, Seq("doc_id"), "left_anti")
-
-    // stage 2: exact dedup, keep min doc_id per content hash
-    // (digest-keyed window — uniform by construction, skew-proof)
-    val r2 = r1
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("_h")).orderBy(col("doc_id"))))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-
-    // stage 3: near-dup dedup — band the staged signatures (sub-shingle
-    // docs gated exactly like the batch path: no shingles, no banding),
-    // shared bucket-cap pair stage, verify on the staged shingle sets,
-    // CC keep-min representative. The drop-filter anti-joins touch only
-    // the (doc_id, sig) projection; the verify join reads the heavy
-    // shingle column from the UNfiltered staged frame — candidate ids
-    // came from banding over r2, so they already exclude every dropped
-    // document, and the shingle sets never ride through an anti-join
-    // exchange. The verify side is further semi-join-REDUCED to the
-    // candidate population before its two heavy joins
-    // ([[Dedup.jaccardVerifyOnShinglesReduced]]).
-    val banded = Dedup.bandRowsFromSigs(
-      r2.where(size(col("sh")) > 0).select(col("doc_id"), col("sig")),
-      k, bands)
-    // candidates are id pairs — tiny next to the corpus. Checkpointing
-    // them (a) makes the broadcast gate's count free and (b) keeps the
-    // banding/candidate shuffle from re-running under the verify joins
-    // and the CC loop.
-    val cand = Dedup.candidatePairsFromBanded(banded, maxBucket)
-      .localCheckpoint()
-    // checkpoint the candidate-population reduction too: the verify plan
-    // reads its shingle side twice (id1/id2), and materializing the
-    // candidate-sized reduced frame turns two heavy staged-column scans
-    // into one
-    val reduced = Dedup.reduceShingleSetsToPairs(
-        staged.select(col("doc_id"), col("sh")), cand,
-        broadcastIds = 2 * cand.count() <= Dedup.BroadcastIdsGuidance)
-      .localCheckpoint()
-    val pairs = Dedup.jaccardVerifyOnShingles(reduced, cand, minJaccard)
-    val survivors0 =
-      r2.join(Dedup.nearDupDropIds(pairs), Seq("doc_id"), "left_anti")
-    // the store-append tail has THREE more consumers of the survivor
-    // frame (the watermark agg and two staged writes) plus the caller's
-    // own action — checkpoint once so each reads materialized rows
-    // instead of replaying the flagged-join + window + anti-join chain
-    val survivors =
-      if (storePath.isDefined) survivors0.localCheckpoint() else survivors0
-
-    // stage 4: fold the cleaned corpus into the incremental store with
-    // the signatures ALREADY computed in the staged pass (the journaled
-    // staged-commit append; no text, no recompute)
-    storePath.foreach { p =>
-      SignatureStore.appendSignatures(spark, p,
-        Dedup.bandRowsFromSigs(
-          survivors.where(size(col("sh")) > 0)
-            .select(col("doc_id"), col("sig")), k, bands),
-        survivors.select(col("doc_id"), col("sh")),
-        allowReplay = allowStoreReplay)
-    }
-
-    survivors.select(Seq(col("doc_id")) ++ keep: _*)
-  }
-
-  /** The cleaning chain as a full corpus TRANSFORM: input rows minus
-    * contaminated documents, exact-duplicate non-representatives, and
-    * near-duplicate non-representatives. The id-level chain reads corpus
-    * text once; re-attaching the payload for output is one more scan on
-    * the write side (semi-join on id — broadcastable when survivors of a
-    * partition-sized slice are listed, shuffled-hash otherwise). */
-  def clean(
-      docs: DataFrame,
-      bench: DataFrame,
-      k: Int = 32,
-      bands: Int = 8,
-      shingleN: Int = 3,
-      maxBucket: Int = 64,
-      minJaccard: Double = 0.8,
-      minOverlap: Int = 5,
-      minRatio: Double = 0.0,
-      broadcastBench: Boolean = true,
-      storePath: Option[String] = None,
-      allowStoreReplay: Boolean = false
-  ): DataFrame =
-    docs.join(
-      cleanedMeta(docs, bench, Nil, k, bands, shingleN, maxBucket,
-        minJaccard, minOverlap, minRatio, broadcastBench, storePath,
-        allowStoreReplay),
-      Seq("doc_id"), "left_semi")
-
-  // ---- parquet-staged, resumable chain ---------------------------------
-
-  /** [[cleanedMeta]] in its multi-job operational shape: the one-pass
-    * `(doc_id, keep…, _h, sh, sig)` projection is staged to PARQUET under
-    * `stageDir` instead of `localCheckpoint`, and every stage persists
-    * its (id-only, tiny) output with a completion marker, so a crashed
-    * chain RESUMES from the last completed stage without re-scanning
-    * corpus text. At 100 TB the cleaning chain is a multi-hour job; with
-    * `localCheckpoint` staging a failure anywhere re-runs everything and
-    * the staged artifact (≈ corpus-text-sized) lives in executor
-    * memory/spill — here it lives at rest, any stage re-reads only the
-    * columns it needs (the text column does not exist in the staged
-    * table at all), and the whole run is restartable per stage, the same
-    * manifest-resume discipline as
-    * [[graft.pipeline.KgPipeline.runResumable]].
+  /** Surviving `(doc_id, keepCols…)` rows of the cleaning chain, staged
+    * and resumable under `stageDir`. The one-pass `(doc_id, keep…, _h,
+    * sh, sig)` projection is staged to parquet, and every stage persists
+    * its output, so a crashed chain resumes from the last committed stage
+    * without re-scanning corpus text: any stage re-reads only the columns
+    * it needs (the text column does not exist in the staged table at
+    * all). The output is metadata-only by design — joining text back in
+    * is the caller's write-side concern ([[cleanResumable]]).
     *
-    * Layout under `stageDir` (each stage gated on its own parquet
-    * `_SUCCESS` marker — a write that died mid-stage is rewritten, never
-    * trusted):
+    * Layout under `stageDir`, resumed through the [[graft.pipeline.Stages]]
+    * protocol shared with [[graft.pipeline.KgPipeline.runResumable]] (a
+    * stage is committed by its `_manifest` row; every output is written
+    * with `Overwrite`, so a stage that died before its row is redone):
     *
     *  - `_params`       — the run's parameters; a resume with DIFFERENT
     *                      parameters refuses loudly (staged signatures
@@ -229,18 +80,18 @@ object CleaningPipeline {
     *                      double-runs it (see [[SignatureStore.recover]]).
     *  - `_manifest/`    — per-stage lineage: `(stage, rows, wall_ms)`.
     *
-    * CONTRACT (same as KgPipeline staging): the run binds to the FIRST
-    * input staged into `stageDir` — resuming with different/extra `docs`
-    * or `bench` rows processes the staged corpus and the persisted
-    * flagged set, not the new input; a new input needs a new `stageDir`.
-    * Single writer per `stageDir`. `broadcastBench` is an execution
-    * hint, not semantics, so it is not part of the parameter manifest.
-    * Stage-dir paths are driver-local by the sandbox contract (the
-    * KgPipeline note applies verbatim); a cluster deployment swaps the
-    * java.nio checks for the Hadoop FileSystem API. A crash between a
-    * stage's parquet write and its manifest append loses that stage's
-    * `_manifest` ROW only — the stage itself (gated on `_SUCCESS`, not
-    * the manifest) resumes correctly.
+    * CONTRACT: the run binds to the FIRST input staged into `stageDir` —
+    * resuming with different/extra `docs` or `bench` rows processes the
+    * staged corpus and the persisted flagged set, not the new input; a
+    * new input needs a new `stageDir`. `broadcastBench` is an execution
+    * hint, not semantics, so it is not pinned.
+    *
+    * `allowStoreReplay`: a RE-RUN of the same cleaning job after its
+    * store append already committed re-appends the same survivors —
+    * with strict monotone checking the retry refuses on the watermark.
+    * Pass true for an idempotent re-run (the store's windowed replay
+    * gate still refuses genuinely misnumbered ids; duplicate rows are
+    * probe-tolerated and compactable).
     */
   def cleanedMetaResumable(
       docs: DataFrame,
@@ -266,9 +117,11 @@ object CleaningPipeline {
   def manifest(spark: SparkSession, stageDir: String): DataFrame =
     spark.read.parquet(s"$stageDir/_manifest")
 
-  /** [[clean]] over the resumable chain: the full-row corpus transform,
-    * with the id-level work staged/resumed under `stageDir`. The payload
-    * re-attach is the one deliberate second text scan (write-side). */
+  /** The cleaning chain as a full corpus TRANSFORM: input rows minus
+    * contaminated documents, exact-duplicate non-representatives, and
+    * near-duplicate non-representatives, with the id-level work
+    * staged/resumed under `stageDir`. The payload re-attach is the one
+    * deliberate second text scan (write-side semi-join on id). */
   def cleanResumable(
       docs: DataFrame,
       bench: DataFrame,
@@ -290,64 +143,10 @@ object CleaningPipeline {
         storePath, allowStoreReplay),
       Seq("doc_id"), "left_semi")
 
-  private def hasSuccess(dir: String): Boolean =
-    Files.exists(Paths.get(s"$dir/_SUCCESS"))
-
-  /** Atomic (temp + move) parameter-manifest write. On resume the
-    * banding/threshold parameters must equal the stored manifest EXACTLY
-    * (staged signatures computed under one banding are not valid under
-    * another); `keepCols` is compatibility-checked as a SUBSET instead —
-    * the staged table carries the BINDING run's keep columns, so a
-    * caller asking for fewer (e.g. [[cleanResumable]]'s id-only needs)
-    * reads a strict subset of what is staged. Returns the effective
-    * (binding-run) keep columns, which stage 0 must stage if it still
-    * has to run. */
-  private def checkOrWriteParams(stageDir: String, core: String,
-      keepCols: Seq[String]): Seq[String] = {
-    val p = Paths.get(s"$stageDir/_params")
-    if (Files.exists(p)) {
-      val stored = new String(Files.readAllBytes(p), "UTF-8")
-      val lines = stored.split("\n", -1).toSeq
-      val storedCore = lines
-        .filterNot(l => l.startsWith("keepCols=") ||
-          l.startsWith("shRepr=") || l.isEmpty)
-        .mkString("\n")
-      val storedKeep = lines.find(_.startsWith("keepCols="))
-        .map(_.stripPrefix("keepCols=")).getOrElse("")
-        .split(",").filter(_.nonEmpty).toSeq
-      require(storedCore == core,
-        s"resume into $stageDir with different parameters — staged " +
-          s"artifacts were computed under:\n$storedCore\nbut this run " +
-          s"asks for:\n$core\nUse a new stageDir (or the original " +
-          "parameters).")
-      // the staged shingle sets' at-rest representation must match what
-      // THIS engine computes (ADVICE r6): were the hash function/seed
-      // ever to change, a resumed dir's overlap joins would silently
-      // match nothing. Absent on legacy dirs — there the element-type
-      // schema fallback (`shForStore`) is the only guard available.
-      lines.find(_.startsWith("shRepr=")).map(_.stripPrefix("shRepr="))
-        .foreach(storedRepr =>
-          require(storedRepr == SignatureStore.ShRepr,
-            s"resume into $stageDir staged shingle sets under " +
-              s"representation '$storedRepr' but this engine computes " +
-              s"'${SignatureStore.ShRepr}' — overlap joins across " +
-              "representations match nothing; use a new stageDir"))
-      storedKeep
-    } else {
-      Files.createDirectories(p.getParent)
-      val tmp = Paths.get(s"$stageDir/._params.tmp")
-      Files.write(tmp,
-        (s"$core\nshRepr=${SignatureStore.ShRepr}\n" +
-          s"keepCols=${keepCols.mkString(",")}\n").getBytes("UTF-8"))
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-      keepCols
-    }
-  }
-
   /** Runs stages 0..`upTo` (0=staging text pass, 1=decontaminate,
     * 2=exact drops, 3=near-dup drops, 4=store append), skipping stages
-    * whose output already carries a completion marker. Returns the
-    * survivor frame once stage 3 is available and `upTo` ≥ 4.
+    * the manifest already lists. Returns the survivor frame once stage 3
+    * is available and `upTo` ≥ 4.
     * Package-private so the spec can kill the chain between stages and
     * resume it. */
   private[graft] def runStages(
@@ -363,16 +162,41 @@ object CleaningPipeline {
       upTo: Int
   ): Option[DataFrame] = {
     val spark = docs.sparkSession
-    // parameter validation FIRST (ADVICE r6): `core` pins storePath, so a
-    // resume mistakenly pointed at a DIFFERENT store refuses here —
+    import spark.implicits._
+    // parameter validation FIRST (ADVICE r6): the pin covers storePath,
+    // so a resume mistakenly pointed at a DIFFERENT store refuses here —
     // before the recover() below could replay that store's pending
-    // journal (which may belong to another in-flight writer's commit)
-    val stagedKeep = checkOrWriteParams(stageDir,
-      s"k=$k\nbands=$bands\nshingleN=$shingleN\nmaxBucket=$maxBucket\n" +
-        s"minJaccard=$minJaccard\nminOverlap=$minOverlap\n" +
-        s"minRatio=$minRatio\n" +
-        s"storePath=${storePath.getOrElse("")}",
-      keepCols)
+    // journal (which may belong to another in-flight writer's commit).
+    // keepCols and the shingle representation are recorded, not pinned:
+    // they are checked against the stored values below.
+    val stages = Stages.open(spark, stageDir, "stage", Seq(
+      "k" -> k.toString, "bands" -> bands.toString,
+      "shingleN" -> shingleN.toString, "maxBucket" -> maxBucket.toString,
+      "minJaccard" -> minJaccard.toString,
+      "minOverlap" -> minOverlap.toString, "minRatio" -> minRatio.toString,
+      "storePath" -> storePath.getOrElse("")),
+      recorded = Seq("shRepr" -> SignatureStore.ShRepr,
+        "keepCols" -> keepCols.mkString(",")))
+    // the staged shingle sets' at-rest representation must match what
+    // THIS engine computes (ADVICE r6): were the hash function/seed ever
+    // to change, a resumed dir's overlap joins would silently match
+    // nothing. Absent on legacy dirs — there the element-type schema
+    // fallback (`shForStore`) is the only guard available.
+    stages.params.get("shRepr").foreach(storedRepr =>
+      require(storedRepr == SignatureStore.ShRepr,
+        s"resume into $stageDir staged shingle sets under representation " +
+          s"'$storedRepr' but this engine computes " +
+          s"'${SignatureStore.ShRepr}' — overlap joins across " +
+          "representations match nothing; use a new stageDir"))
+    // the staged table carries the BINDING run's keep columns, so a
+    // caller may ask for any subset of them (e.g. [[cleanResumable]]'s
+    // id-only needs); stage 0, if it still has to run, stages them all
+    val stagedKeep = stages.params.getOrElse("keepCols", "")
+      .split(",").filter(_.nonEmpty).toSeq
+    require(keepCols.forall(stagedKeep.contains),
+      s"resume into $stageDir asks for keepCols ${keepCols.mkString(",")}" +
+        s" but the run staged only ${stagedKeep.mkString(",")}; use a new " +
+        "stageDir")
     storePath.foreach { p =>
       // a prior attempt that crashed INSIDE the store's commit window
       // leaves the journal present and the metadata deleted — the plain
@@ -395,33 +219,26 @@ object CleaningPipeline {
     val flaggedDir = s"$stageDir/stage1_flagged"
     val exactDir = s"$stageDir/stage2_exact_drops"
     val nearDir = s"$stageDir/stage3_near_drops"
-    val manifestDir = s"$stageDir/_manifest"
 
-    var t0 = System.nanoTime()
-    // r8 (guide §1.4/§5): the manifest row count is OBSERVED on the
-    // stage's own write job (`Dataset.observe` — metrics accumulate
-    // during the write) instead of re-reading the freshly written
-    // parquet. The former read-back count was one extra job per stage —
-    // and for stage 0 a full scan of the corpus-sized staged artifact
-    // just to count its rows.
-    def observed(stage: Int, df: DataFrame): (DataFrame, () => Long) = {
-      val obs = org.apache.spark.sql.Observation(s"stage$stage rows")
-      (df.observe(obs, count(lit(1)).as("rows")),
-        () => obs.get("rows").asInstanceOf[Long])
-    }
-    def record(stage: Int, rows: Long): Unit = {
-      import spark.implicits._
-      Seq((stage, rows, (System.nanoTime() - t0) / 1000000L))
-        .toDF("stage", "rows", "wall_ms")
-        .write.mode(SaveMode.Append).parquet(manifestDir)
-    }
+    // each stage's row count is OBSERVED on the stage's own write job
+    // (r8) instead of re-reading the freshly written parquet — for stage
+    // 0 that read-back was a full scan of the corpus-sized staged artifact
+    def stage(n: Int)(write: => Long): Unit =
+      stages.run(n) {
+        val t0 = System.nanoTime()
+        val rows = write
+        StageStat(n, rows, (System.nanoTime() - t0) / 1000000L)
+      }
 
     // stage 0 — THE text pass, at rest (staging the BINDING run's keep
     // columns, a superset of this caller's). `nsh` carries the shingle
     // count as its own tiny column so stage 3's sub-shingle gate never
-    // has to decode the heavy `sh` array just to take its size.
-    if (!hasSuccess(stagedDir)) {
-      val (df0, rows0) = observed(0, docs.select(
+    // has to decode the heavy `sh` array just to take its size. The
+    // shingle sets carry the HASHED representation ([[Dedup.hashShingles]]):
+    // every consumer (overlap counts, Jaccard verify, the store append) is
+    // cardinality arithmetic, which hashing preserves, at ~2.5× fewer bytes.
+    stage(0) {
+      val (df0, rows0) = Stages.counted(docs.select(
           Seq(col("doc_id")) ++ stagedKeep.map(col) ++ Seq(
             md5(col("text").cast("binary")).as("_h"),
             Dedup.hashShingles(
@@ -442,7 +259,7 @@ object CleaningPipeline {
         // intra-job artifact; the long-lived CORPUS is where the
         // round-5 zstd-at-rest recommendation applies.
         .write.mode(SaveMode.Overwrite).parquet(stagedDir)
-      record(0, rows0())
+      rows0()
     }
     def staged = spark.read.parquet(stagedDir)
     // stage dirs staged before the nsh column existed resume fine — the
@@ -463,23 +280,21 @@ object CleaningPipeline {
     if (upTo < 1) return None
 
     // stage 1 — decontamination flags over the staged shingle sets
-    t0 = System.nanoTime()
-    if (!hasSuccess(flaggedDir)) {
-      val (df1, rows1) = observed(1,
+    stage(1) {
+      val (df1, rows1) = Stages.counted(
         Decontaminate.contaminationReportOnShingles(
             staged.select(col("doc_id"), col("sh")), bench, shingleN,
             minOverlap, minRatio, broadcastBench)
           .select(col("doc_id")).distinct())
       df1.write.mode(SaveMode.Overwrite).parquet(flaggedDir)
-      record(1, rows1())
+      rows1()
     }
     def flagged = spark.read.parquet(flaggedDir)
     if (upTo < 2) return None
 
     // stage 2 — exact-duplicate drops (digest-keyed window, hash+id only)
-    t0 = System.nanoTime()
-    if (!hasSuccess(exactDir)) {
-      val (df2, rows2) = observed(2,
+    stage(2) {
+      val (df2, rows2) = Stages.counted(
         staged.select(col("doc_id"), col("_h"))
           .join(flagged, Seq("doc_id"), "left_anti")
           .withColumn("_rn", row_number().over(
@@ -487,7 +302,7 @@ object CleaningPipeline {
           .where(col("_rn") > 1)
           .select(col("doc_id")))
       df2.write.mode(SaveMode.Overwrite).parquet(exactDir)
-      record(2, rows2())
+      rows2()
     }
     def exactDrops = spark.read.parquet(exactDir)
     if (upTo < 3) return None
@@ -500,8 +315,7 @@ object CleaningPipeline {
     // shingle sets never ride through an anti-join exchange, and the
     // verify side is semi-join-reduced to the candidate population
     // before its two heavy joins.
-    t0 = System.nanoTime()
-    if (!hasSuccess(nearDir)) {
+    stage(3) {
       val sigs = staged
         .where(shCount > 0).select(col("doc_id"), col("sig"))
         .join(flagged, Seq("doc_id"), "left_anti")
@@ -524,9 +338,9 @@ object CleaningPipeline {
           broadcastIds = 2 * cand.count() <= Dedup.BroadcastIdsGuidance)
         .localCheckpoint(eager = false)
       val pairs = Dedup.jaccardVerifyOnShingles(reduced, cand, minJaccard)
-      val (df3, rows3) = observed(3, Dedup.nearDupDropIds(pairs))
+      val (df3, rows3) = Stages.counted(Dedup.nearDupDropIds(pairs))
       df3.write.mode(SaveMode.Overwrite).parquet(nearDir)
-      record(3, rows3())
+      rows3()
     }
     def nearDrops = spark.read.parquet(nearDir)
     def survivorIds(cols: Seq[String]) =
@@ -541,57 +355,57 @@ object CleaningPipeline {
     storePath.foreach { sp =>
       val done = Paths.get(s"$stageDir/stage4_store_done")
       val attempt = Paths.get(s"$stageDir/stage4_store_attempt")
-      if (!Files.exists(done)) {
-        t0 = System.nanoTime()
-        val attempted = Files.exists(attempt)
-        // the attempt marker carries this run's commit tag, so a resumed
-        // attempt asks the STORE whether this exact append committed —
-        // a POSITIVE record (ADVICE r6) instead of the old watermark
-        // inference, which wrongly skipped the append when the watermark
-        // already covered the batch ids for another reason (an
-        // allowStoreReplay re-run, or a store advanced by a later batch)
-        // after a crash BEFORE the commit.
-        val tag =
-          if (attempted)
-            new String(Files.readAllBytes(attempt), "UTF-8").trim
-          else {
-            val t = java.util.UUID.randomUUID().toString
-            Files.write(attempt, t.getBytes("UTF-8"))
-            t
+      stage(4) {
+        // the done marker confirms a committed append whose manifest row
+        // never landed
+        if (!Files.exists(done)) {
+          val attempted = Files.exists(attempt)
+          // the attempt marker carries this run's commit tag, so a resumed
+          // attempt asks the STORE whether this exact append committed —
+          // a POSITIVE record (ADVICE r6) instead of the old watermark
+          // inference, which wrongly skipped the append when the watermark
+          // already covered the batch ids for another reason (an
+          // allowStoreReplay re-run, or a store advanced by a later batch)
+          // after a crash BEFORE the commit.
+          val tag =
+            if (attempted)
+              new String(Files.readAllBytes(attempt), "UTF-8").trim
+            else {
+              val t = java.util.UUID.randomUUID().toString
+              Files.write(attempt, t.getBytes("UTF-8"))
+              t
+            }
+          // finish any journaled commit a crashed attempt left behind —
+          // after this the store is consistent: the prior append either
+          // fully committed (metadata then carries its tag) or never
+          // touched the live store
+          SignatureStore.recover(spark, sp)
+          val surv = survivorIds(Seq("doc_id", "sh", "sig"))
+          val alreadyIn =
+            if (attempted && tag.nonEmpty)
+              SignatureStore.readMeta(spark, sp).lastCommitTag == tag
+            else if (attempted) {
+              // legacy attempt marker without a tag: the old watermark
+              // inference, but REFUSED under allowStoreReplay where it is
+              // exactly ambiguous (a redundant replayed append is
+              // at-least-once-safe; a wrongly skipped one silently loses
+              // the batch's signatures)
+              val mxRow = surv.agg(max(col("doc_id").cast("long"))).head()
+              !allowStoreReplay && !mxRow.isNullAt(0) &&
+                SignatureStore.readMeta(spark, sp).maxDocId >= mxRow.getLong(0)
+            } else false
+          if (!alreadyIn) {
+            SignatureStore.appendSignatures(spark, sp,
+              Dedup.bandRowsFromSigs(
+                surv.where(size(col("sh")) > 0)
+                  .select(col("doc_id"), col("sig")), k, bands),
+              surv.select(col("doc_id"), shForStore),
+              allowReplay = allowStoreReplay || attempted,
+              commitTag = Some(tag))
           }
-        // finish any journaled commit a crashed attempt left behind —
-        // after this the store is consistent: the prior append either
-        // fully committed (metadata then carries its tag) or never
-        // touched the live store
-        SignatureStore.recover(spark, sp)
-        val surv = survivorIds(Seq("doc_id", "sh", "sig"))
-        val alreadyIn =
-          if (attempted && tag.nonEmpty)
-            SignatureStore.readMeta(spark, sp).lastCommitTag == tag
-          else if (attempted) {
-            // legacy attempt marker without a tag: the old watermark
-            // inference, but REFUSED under allowStoreReplay where it is
-            // exactly ambiguous (a redundant replayed append is
-            // at-least-once-safe; a wrongly skipped one silently loses
-            // the batch's signatures)
-            val mxRow = surv.agg(max(col("doc_id").cast("long"))).head()
-            !allowStoreReplay && !mxRow.isNullAt(0) &&
-              SignatureStore.readMeta(spark, sp).maxDocId >= mxRow.getLong(0)
-          } else false
-        if (!alreadyIn) {
-          SignatureStore.appendSignatures(spark, sp,
-            Dedup.bandRowsFromSigs(
-              surv.where(size(col("sh")) > 0)
-                .select(col("doc_id"), col("sig")), k, bands),
-            surv.select(col("doc_id"), shForStore),
-            allowReplay = allowStoreReplay || attempted,
-            commitTag = Some(tag))
+          Files.createFile(done)
         }
-        Files.createFile(done)
-        import spark.implicits._
-        Seq((4, 0L, (System.nanoTime() - t0) / 1000000L))
-          .toDF("stage", "rows", "wall_ms")
-          .write.mode(SaveMode.Append).parquet(manifestDir)
+        0L
       }
     }
 

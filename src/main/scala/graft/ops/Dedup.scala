@@ -345,7 +345,7 @@ object Dedup {
   /** Verified near-dup pairs `(id1, id2, jaccard)` over ONE staged text
     * pass — the composed candidate→verify chain of [[nearDupGroups]] /
     * [[nearDupDedup]] in the cleaning pipeline's shape
-    * ([[CleaningPipeline.cleanedMeta]], stage 3): per-document content
+    * ([[CleaningPipeline.runStages]], stage 3): per-document content
     * signature AND distinct hashed shingle set are computed in a single
     * codegen'd projection and checkpointed, banding reads only `sig`,
     * and verification reads the `sh` column semi-join-REDUCED to the

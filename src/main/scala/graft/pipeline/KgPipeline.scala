@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.core.{Article, Mention, Triple}
 import graft.graph.GraphMaterialize
@@ -25,10 +26,11 @@ import graft.ner.{AliasTrieScorer, NerStage, TokenScorer}
   * Checkpoint-resume (north rule; the reference restarts per prefix dir,
   * `cli_tagger.py:250-259`): articles are bucketed by `pmod(xxhash64(url),
   * buckets)`; each bucket writes to its own output partition directory and
-  * a manifest row `(bucket, n_articles, n_mentions, n_triples, wall_ms)`.
-  * On restart, buckets already present in the manifest are skipped — a
-  * resumed run never recomputes finished work and per-partition lineage is
-  * queryable from the `_manifest` table.
+  * a manifest row `(bucket, n_articles, n_mentions, n_triples, wall_ms)`
+  * through the shared [[Stages]] protocol. On restart, buckets already
+  * present in the manifest are skipped — a resumed run never recomputes
+  * finished work and per-partition lineage is queryable from the
+  * `_manifest` table.
   */
 object KgPipeline {
 
@@ -66,12 +68,15 @@ object KgPipeline {
     val spark = articles.sparkSession
     import spark.implicits._
 
-    val manifestDir = s"$outDir/_manifest"
-    val done: Set[Int] =
-      if (Files.exists(Paths.get(manifestDir)))
-        spark.read.parquet(manifestDir).select("bucket")
-          .as[Int].collect().toSet
-      else Set.empty
+    // staged buckets, mentions and triples are valid only for the input,
+    // bucket count and scorer that produced them: a resume that changes
+    // any of them refuses (the input is pinned by its file list, read
+    // from driver metadata — a full second pass to compare contents is
+    // exactly what staging exists to avoid)
+    val stages = Stages.open(spark, outDir, "bucket", Seq(
+      "buckets" -> buckets.toString,
+      "scorer" -> scorer.getClass.getName,
+      "inputs" -> Stages.inputDigest(articles.inputFiles.toSeq)))
 
     // If the input already carries a `bucket` partition column (bucketed
     // table layout), filtering on it prunes to that bucket's files and the
@@ -80,24 +85,23 @@ object KgPipeline {
     // input pass writing parquet partitioned by `_bucket` — and loop over
     // the staged table with partition pruning. Without staging, the loop
     // would rescan the whole corpus once per bucket (B passes: a 256-bucket
-    // recovery run over raw 100 TB input would read 25.6 PB).
-    val hasBucketCol = articles.columns.contains("bucket")
-    val bucketed =
-      if (hasBucketCol) articles.toDF().withColumnRenamed("bucket", "_bucket")
-      else {
-        // staging completeness is gated on the _SUCCESS marker, not bare
-        // directory existence — a run that died mid-staging-write leaves a
-        // partial directory which must be rewritten, never trusted
-        // (silently processing it would drop every unstaged article).
-        // CONTRACT: staging binds the run to the FIRST input it staged.
-        // A completed staging in outDir is reused as-is; re-invoking
-        // runResumable into the same outDir with different/extra input
-        // articles processes the staged corpus, not the new one. A new
-        // input needs a new outDir (validating input-vs-staging equality
-        // would cost a full second pass over the raw corpus — exactly what
-        // staging exists to avoid).
-        // Paths here are driver-local by the sandbox contract; a cluster
-        // deployment swaps these checks for the Hadoop FileSystem API.
+    // recovery run over raw 100 TB input would read 25.6 PB). Lazy: a
+    // resume with every bucket done touches neither.
+    lazy val bucketed =
+      if (articles.columns.contains("bucket")) {
+        val in = articles.toDF().withColumnRenamed("bucket", "_bucket")
+        // the bucket column comes from outside the program, so the pinned
+        // count must cover it or the tail buckets would never be processed
+        val staged = in.select(max(col("_bucket"))).head()
+        val maxSeen = if (staged.isNullAt(0)) -1 else staged.getInt(0)
+        require(maxSeen < buckets,
+          s"input carries buckets up to $maxSeen but runResumable was " +
+            s"called with buckets=$buckets — those buckets would silently " +
+            "never be processed; resume with the original bucket count")
+        in
+      } else {
+        // staging completeness is gated on the _SUCCESS marker: a run that
+        // died mid-staging-write leaves a partial directory, rewritten
         val stagingDir = s"$outDir/_staging"
         if (!Files.exists(Paths.get(s"$stagingDir/_SUCCESS")))
           articles.toDF()
@@ -106,42 +110,34 @@ object KgPipeline {
             .write.mode(SaveMode.Overwrite)
             .partitionBy("_bucket")
             .parquet(stagingDir)
-        spark.read.parquet(stagingDir)
+        // the staged schema is known, so the read runs no inference job
+        spark.read.schema(articles.schema.add("_bucket", IntegerType))
+          .parquet(stagingDir)
       }
 
-    // the authoritative bucket count is what the data says, not the
-    // caller's argument: resuming with a smaller `buckets` than the run
-    // that staged/started would silently never process the tail buckets
-    val effectiveBuckets = {
-      val staged = bucketed.select(max(col("_bucket"))).head()
-      val maxSeen = if (staged.isNullAt(0)) -1 else staged.getInt(0)
-      require(maxSeen < buckets,
-        s"input carries buckets up to $maxSeen but runResumable was called " +
-          s"with buckets=$buckets — those buckets would silently never be " +
-          "processed; resume with the original bucket count")
-      buckets
+    (0 until buckets).flatMap { b =>
+      stages.run(b) {
+        val in = bucketed // staged by the first bucket to run, untimed
+        val t0 = System.nanoTime()
+        // every input article of the bucket is counted before the lang/tp
+        // gate; the counter sits above the `_bucket` filter, so the scan
+        // still prunes to this bucket's partition
+        val (part, nArticles) = Stages.counted(
+          in.where(col("_bucket") === b).drop("_bucket").as[Article])
+        // NER runs once, inside the mentions write; the triples are built
+        // from the mentions just written
+        val (ms, nMentions) = Stages.counted(NerStage.detect(part, scorer))
+        val mentionsDir = s"$outDir/mentions/bucket=$b"
+        ms.toDF().write.mode(SaveMode.Overwrite).parquet(mentionsDir)
+        val (ts, nTriples) = Stages.counted(GraphMaterialize.triples(
+          spark.read.schema(ms.schema).parquet(mentionsDir).as[Mention]))
+        ts.toDF().write.mode(SaveMode.Overwrite)
+          .partitionBy("pred")
+          .parquet(s"$outDir/triples/bucket=$b")
+        BucketStat(b, nArticles(), nMentions(), nTriples(),
+          (System.nanoTime() - t0) / 1000000)
+      }
     }
-
-    val stats = (0 until effectiveBuckets).filterNot(done).map { b =>
-      val t0 = System.nanoTime()
-      val part = bucketed.where(col("_bucket") === b).drop("_bucket").as[Article]
-      val ms = NerStage.detect(part, scorer).cache()
-      val nMentions = ms.count()
-      val nArticles = part.count()
-      val ts = GraphMaterialize.triples(ms)
-      ms.toDF().write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/mentions/bucket=$b")
-      ts.toDF().write.mode(SaveMode.Overwrite)
-        .partitionBy("pred")
-        .parquet(s"$outDir/triples/bucket=$b")
-      val nTriples = spark.read.parquet(s"$outDir/triples/bucket=$b").count()
-      ms.unpersist()
-      val stat = BucketStat(b, nArticles, nMentions, nTriples,
-        (System.nanoTime() - t0) / 1000000)
-      Seq(stat).toDS().write.mode(SaveMode.Append).parquet(manifestDir)
-      stat
-    }
-    stats
   }
 
   /** Per-partition lineage/metrics view over the manifest (north rule:

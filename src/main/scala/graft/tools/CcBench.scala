@@ -174,13 +174,6 @@ object CcBench {
     * offsets to split "inside jobs but between stages" from "outside
     * jobs entirely". */
   private def roundsMain(cores: Int, nEdges: Long): Unit = {
-    // robust parse, BEFORE any work (ADVICE r7): a malformed or
-    // non-positive value must fail here, not NumberFormatException after
-    // the corpus materialization and warm-up already ran
-    val hops = sys.env.get("GRAFT_CC_HOPS")
-      .map(s => scala.util.Try(s.toInt).toOption.filter(_ >= 1).getOrElse(
-        sys.error(s"GRAFT_CC_HOPS must be a positive int, got '$s'")))
-      .getOrElse(1)
     materialize(nEdges)
     System.err.println(
       f"CALIB $cores ${HostCalibration.cpuCalibrationWall()}%.2f s")
@@ -325,15 +318,12 @@ object CcBench {
         .unpersistLocalCheckpoint(warm)
       drainStages(print = false)
       val e = spark.read.parquet(dir(nEdges))
-      // GRAFT_CC_HOPS (parsed fail-fast at roundsMain entry) probes the
-      // rounds-vs-per-round-cost tradeoff of multi-hop pointer
-      // compression without touching the ladder modes
       val t0 = System.nanoTime()
       val (labels, iters) = ConnectedComponents.runCounted(e, maxIter = 40,
         onRound = (iter, changed, secs) => {
           println(f"ROUND $iter%2d changed=$changed%,d wall=$secs%.1f s")
           drainStages(print = true)
-        }, hops = hops)
+        })
       val wall = (System.nanoTime() - t0) / 1e9
       val (nComp, nNodes, dig) = digest(labels)
       println(s"SINGLE $cores $nEdges $wall $iters $nComp $nNodes $dig")

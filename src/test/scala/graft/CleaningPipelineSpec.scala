@@ -6,15 +6,32 @@ import org.apache.spark.sql.functions._
 import graft.ops.{CleaningPipeline, SignatureStore}
 
 /** The composed cleaning chain: stage semantics on a planted fixture,
-  * the store-append tail, and the one-text-pass guarantee (filesystem
-  * read statistics — the staged artifacts live in the block manager, so
-  * file-scheme bytes are exactly the parquet scans). */
+  * the store-append tail, resume after a crash between any two steps, and
+  * the one-text-pass guarantee (corpus file opens through a counting
+  * file system). */
 class CleaningPipelineSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
   private def words(p: String, n: Int = 30) =
     (1 to n).map(t => s"${p}_$t").mkString(" ")
+
+  /** A fresh stage directory: a re-run, as opposed to a resume. */
+  private def freshStage() =
+    java.nio.file.Files.createTempDirectory("graft_clean_stage").toString
+
+  private def manifestStages(stage: String) =
+    CleaningPipeline.manifest(spark, stage).select("stage").collect()
+      .map(_.getInt(0)).sorted.toSeq
+
+  /** Simulates a crash after stage `n`'s outputs but before its manifest
+    * row: rewrites the manifest without that row. */
+  private def dropManifestRow(stage: String, n: Int): Unit = {
+    val m = CleaningPipeline.manifest(spark, stage)
+      .where(col("stage") =!= n).localCheckpoint()
+    new java.io.File(s"$stage/_manifest").listFiles().foreach(_.delete())
+    m.write.mode("overwrite").parquet(s"$stage/_manifest")
+  }
 
   test("composed chain: contaminated, exact-dup, and near-dup docs drop; store gets survivors") {
     import spark.implicits._
@@ -39,8 +56,8 @@ class CleaningPipelineSpec extends AnyFunSuite {
       Seq((0L, words("seed"))).toDF("doc_id", "text"), store,
       nPrefixes = 8, k = 32, bands = 16, shingleN = 3)
 
-    val kept = CleaningPipeline.cleanedMeta(docs, bench,
-      keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+    val kept = CleaningPipeline.cleanedMetaResumable(docs, bench,
+      freshStage(), keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
       maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
       storePath = Some(store))
     assert(kept.columns.toSeq == Seq("doc_id", "lang"))
@@ -48,8 +65,9 @@ class CleaningPipelineSpec extends AnyFunSuite {
     assert(keptIds == Set(3L, 6L))
 
     // the full-row transform agrees
-    val full = CleaningPipeline.clean(docs, bench, k = 32, bands = 16,
-      shingleN = 3, maxBucket = 64, minJaccard = 0.8, minOverlap = 5)
+    val full = CleaningPipeline.cleanResumable(docs, bench, freshStage(),
+      k = 32, bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
+      minOverlap = 5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(full == Set(3L, 6L))
 
@@ -73,12 +91,13 @@ class CleaningPipelineSpec extends AnyFunSuite {
     // (misnumbered-source protection), and succeeds idempotently as a
     // declared replay — survivors unchanged, the store still answers
     intercept[IllegalArgumentException] {
-      CleaningPipeline.cleanedMeta(docs, bench, keepCols = Seq("lang"),
-        k = 32, bands = 16, shingleN = 3, maxBucket = 64,
-        minJaccard = 0.8, minOverlap = 5, storePath = Some(store)).count()
+      CleaningPipeline.cleanedMetaResumable(docs, bench, freshStage(),
+        keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+        maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
+        storePath = Some(store)).count()
     }
-    val rerun = CleaningPipeline.cleanedMeta(docs, bench,
-      keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+    val rerun = CleaningPipeline.cleanedMetaResumable(docs, bench,
+      freshStage(), keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
       maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
       storePath = Some(store), allowStoreReplay = true)
       .collect().map(_.getLong(0)).toSet
@@ -97,8 +116,8 @@ class CleaningPipelineSpec extends AnyFunSuite {
     val docs = Seq((1L, words("a"))).toDF("doc_id", "text")
     val bench = Seq((900L, words("bb"))).toDF("bench_id", "text")
     val e = intercept[IllegalArgumentException] {
-      CleaningPipeline.cleanedMeta(docs, bench, Nil, k = 32, bands = 16,
-        shingleN = 3, storePath = Some(store))
+      CleaningPipeline.cleanedMetaResumable(docs, bench, freshStage(), Nil,
+        k = 32, bands = 16, shingleN = 3, storePath = Some(store))
     }
     assert(e.getMessage.contains("bands"))
   }
@@ -145,8 +164,8 @@ class CleaningPipelineSpec extends AnyFunSuite {
       val (maxBucket, minOverlap) =
         (if (rnd.nextBoolean()) 2 else 64, 1 + rnd.nextInt(4))
 
-      val composed = CleaningPipeline.cleanedMeta(docs, bench, Nil,
-        k = 32, bands = 16, shingleN = 3, maxBucket = maxBucket,
+      val composed = CleaningPipeline.cleanedMetaResumable(docs, bench,
+        freshStage(), Nil, k = 32, bands = 16, shingleN = 3, maxBucket = maxBucket,
         minJaccard = 0.8, minOverlap = minOverlap)
         .collect().map(_.getLong(0)).toSet
       val independent = graft.ops.Dedup.nearDupDedup(
@@ -206,10 +225,11 @@ class CleaningPipelineSpec extends AnyFunSuite {
       storePath = Some(store))
     assert(kept.columns.toSeq == Seq("doc_id", "lang"))
     assert(kept.collect().map(_.getLong(0)).toSet == Set(3L, 6L))
-    // ...and it matches the one-job localCheckpoint path exactly
-    assert(CleaningPipeline.cleanedMeta(docs, bench, Nil, k = 32,
-      bands = 16, shingleN = 3, maxBucket = 64, minJaccard = 0.8,
-      minOverlap = 5).collect().map(_.getLong(0)).toSet == Set(3L, 6L))
+    // ...and it matches an uninterrupted run exactly
+    assert(CleaningPipeline.cleanedMetaResumable(docs, bench, freshStage(),
+      Nil, k = 32, bands = 16, shingleN = 3, maxBucket = 64,
+      minJaccard = 0.8, minOverlap = 5).collect().map(_.getLong(0)).toSet
+      == Set(3L, 6L))
     // per-stage lineage is queryable
     assert(CleaningPipeline.manifest(spark, stage)
       .select("stage").collect().map(_.getInt(0)).toSet == Set(0, 1, 2, 3, 4))
@@ -217,15 +237,36 @@ class CleaningPipelineSpec extends AnyFunSuite {
     val nShingleRows = spark.read.parquet(s"$store/shingles").count()
     assert(nShingleRows == 2L) // survivors 3 and 6
 
-    // crash AFTER the store commit but BEFORE the done marker: the resume
-    // recognizes the advanced watermark and does NOT double-append
+    // crash AFTER the store commit but BEFORE the done marker (and so
+    // before stage 4's manifest row): the resume recognizes its own
+    // commit tag in the store and does NOT double-append
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$stage/stage4_store_done"))
+    dropManifestRow(stage, 4)
     val again = CleaningPipeline.cleanedMetaResumable(docs, bench, stage,
       keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
       maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
       storePath = Some(store)).collect().map(_.getLong(0)).toSet
     assert(again == Set(3L, 6L))
+    assert(spark.read.parquet(s"$store/shingles").count() == nShingleRows)
+    assert(manifestStages(stage) == Seq(0, 1, 2, 3, 4))
+
+    // crash after stage 3's write but before its manifest row: its
+    // _SUCCESS marker alone does not commit it, so the resume redoes
+    // stage 3 (overwriting its output) and nothing else
+    dropManifestRow(stage, 3)
+    val stage3Success =
+      java.nio.file.Paths.get(s"$stage/stage3_near_drops/_SUCCESS")
+    val before = java.nio.file.Files.getLastModifiedTime(stage3Success)
+    Thread.sleep(10)
+    val redone = CleaningPipeline.cleanedMetaResumable(docs, bench, stage,
+      keepCols = Seq("lang"), k = 32, bands = 16, shingleN = 3,
+      maxBucket = 64, minJaccard = 0.8, minOverlap = 5,
+      storePath = Some(store)).collect().map(_.getLong(0)).toSet
+    assert(java.nio.file.Files.getLastModifiedTime(stage3Success)
+      .compareTo(before) > 0, "stage 3 was not re-run")
+    assert(redone == Set(3L, 6L))
+    assert(manifestStages(stage) == Seq(0, 1, 2, 3, 4))
     assert(spark.read.parquet(s"$store/shingles").count() == nShingleRows)
 
     // crash BEFORE the append ever staged (attempt marker only): the
@@ -337,10 +378,10 @@ class CleaningPipelineSpec extends AnyFunSuite {
     assert(oneScanOpens >= 8, s"calibration degenerate: $oneScanOpens")
 
     graft.tools.CountingLocalFs.reset()
-    val n = CleaningPipeline.cleanedMeta(
+    val n = CleaningPipeline.cleanedMetaResumable(
       spark.read.parquet(s"cntfs:$dir/docs"),
       spark.read.parquet(s"$dir/bench"), // bench on plain file:// —
-      Nil,                               // only corpus opens are counted
+      freshStage(), Nil,                 // only corpus opens are counted
       k = 32, bands = 16, shingleN = 3, maxBucket = 64).count()
     val composedOpens = graft.tools.CountingLocalFs.parquetOpens()
     assert(n > 2000 && n < 3000, s"fixture sanity: $n survivors")
@@ -408,6 +449,9 @@ class CleaningPipelineSpec extends AnyFunSuite {
         graft.ops.Dedup.distinctShingles(col("text"), 3).as("sh"),
         graft.ops.Dedup.minhashSignature(col("text"), 32, 3).as("sig"))
       .write.parquet(s"$stage/staged")
+    // ...and committed it with its stage-0 manifest row, as every run does
+    Seq(CleaningPipeline.StageStat(0, 5L, 0L)).toDF()
+      .write.parquet(s"$stage/_manifest")
     assert(spark.read.parquet(s"$stage/staged").schema("sh").dataType ==
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.StringType, true))

@@ -444,27 +444,6 @@ class EvalGraphSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
   }
 
-  test("CC multi-hop compression is output-invariant") {
-    import spark.implicits._
-    // hops only accelerates (or, measured on random-id graphs, fails to
-    // accelerate) convergence — the fixpoint is the same min-label
-    // assignment. Mixed shape: a 33-node chain (deep) + a star + an
-    // isolated pair, compared across hops ∈ {1, 2, 3}.
-    val edges = ((0L until 32L).sliding(2).map(s => (s(0), s(1))).toSeq ++
-      Seq((100L, 101L), (100L, 102L), (100L, 103L), (200L, 201L)))
-      .toDF("src", "dst")
-    val base = ConnectedComponents.runCounted(edges,
-      smallSolve = Some(false))._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Seq(2, 3).foreach { h =>
-      val (got, rounds) = ConnectedComponents.runCounted(edges, hops = h,
-        smallSolve = Some(false))
-      assert(got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        == base, s"hops=$h diverged")
-      assert(rounds >= 1)
-    }
-  }
-
   test("CC on names: dictionary keys never collide (distinct nodes stay distinct)") {
     import spark.implicits._
     // 5k disjoint string-keyed pairs across 16 partitions; any key

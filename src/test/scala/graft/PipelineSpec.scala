@@ -131,5 +131,88 @@ class PipelineSpec extends AnyFunSuite {
     m.write.mode("overwrite").parquet(s"$dir/_manifest")
     val stats = KgPipeline.runResumable(articles, dir, buckets = 4)
     assert(stats.map(_.bucket) == Seq(2))
+    // bucket 2's outputs were already written when its row went missing:
+    // the redo overwrites them, so the output equals a one-shot run row
+    // for row, with no duplicates, and each bucket is listed once
+    val oneShot = Files.createTempDirectory("kg_resume2_oneshot").toString
+    KgPipeline.runResumable(articles, oneShot, buckets = 4)
+    Seq("mentions", "triples").foreach { t =>
+      val got = spark.read.parquet(s"$dir/$t")
+      val want = spark.read.parquet(s"$oneShot/$t")
+      assert(got.count() == want.count(), t)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, t)
+    }
+    assert(KgPipeline.manifest(spark, dir).select("bucket").collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(0, 1, 2, 3))
+    assert(KgPipeline.manifest(spark, dir).agg(sum("n_articles"))
+      .head().getLong(0) == 400L)
+  }
+
+  test("resume pins buckets, scorer and input files") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("kg_pin_in").toString
+    Synth.articles(spark, 200, 42L, 4).write.parquet(s"$in/a")
+    Synth.articles(spark, 200, 42L, 4).write.parquet(s"$in/b")
+    def read(p: String) =
+      spark.read.parquet(s"$in/$p").as[graft.core.Article]
+    val dir = Files.createTempDirectory("kg_pin").toString
+    assert(KgPipeline.runResumable(read("a"), dir, buckets = 4)
+      .map(_.bucket).sorted == Seq(0, 1, 2, 3))
+    // a larger count would be silently accepted without the pin: the
+    // staged table only holds buckets 0..3
+    Seq(2, 8).foreach { b =>
+      val e = intercept[IllegalArgumentException] {
+        KgPipeline.runResumable(read("a"), dir, buckets = b)
+      }
+      assert(e.getMessage.contains("different parameters"), e.getMessage)
+    }
+    // identical rows under another path are another input
+    intercept[IllegalArgumentException] {
+      KgPipeline.runResumable(read("b"), dir, buckets = 4)
+    }
+    intercept[IllegalArgumentException] {
+      KgPipeline.runResumable(read("a"), dir, buckets = 4,
+        scorer = new graft.ner.LinearTokenScorer)
+    }
+    assert(KgPipeline.runResumable(read("a"), dir, buckets = 4).isEmpty)
+  }
+
+  test("a refused resume runs no Spark job") {
+    val dir = Files.createTempDirectory("kg_pin_jobs").toString
+    val articles = Synth.articles(spark, 200, 42L, 4)
+    KgPipeline.runResumable(articles, dir, buckets = 2)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      intercept[IllegalArgumentException] {
+        KgPipeline.runResumable(articles, dir, buckets = 3)
+      }
+      // the listener bus delivers in order: once the sentinel job is
+      // seen, every job the refused call started has been seen too
+      sc.setJobGroup("sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.asScala.toSeq == Seq("sentinel"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Main refuses unknown flags at parse time") {
+    val ok = graft.app.Main.parseArgs(
+      Array("--synth", "10", "--output", "/tmp/x", "--buckets", "4"))
+    assert(ok == Map("synth" -> "10", "output" -> "/tmp/x", "buckets" -> "4"))
+    Seq("--bucket" -> "64", "--scorer" -> "onnx").foreach { case (f, v) =>
+      val e = intercept[IllegalArgumentException] {
+        graft.app.Main.parseArgs(Array("--synth", "10", "--output", "/tmp/x", f, v))
+      }
+      assert(e.getMessage.contains(s"unknown flag $f"), e.getMessage)
+    }
   }
 }

@@ -7,16 +7,17 @@
 # the ceiling cheaply every ~12 min with graft.tools.HostCalibration
 # and fires ONE full 20M ScalingBench (auto-appends BENCH.md) the
 # first time BOTH ceilings clear the bar; it exits after firing or
-# after ~8 h. Never runs concurrently with another sbt invocation
-# (target-dir lock probe via flock on target/).
+# after ~8 h. Two watcher instances never run sbt at the same time
+# (flock on target/.bench.lock); other sbt runs do not take that lock.
 #
 # Usage: nohup tools/quiet_window_scaling.sh > /tmp/quiet_scaling.log 2>&1 &
 set -u
 cd "$(dirname "$0")/.."
-# the documented concurrency guard (ADVICE r7): every sbt invocation —
-# probe or firing run — holds an exclusive flock on target/.bench.lock,
-# so the watcher can never clobber /dev/shm or contend with a bench/test
-# sbt already running; a held lock skips the probe cycle instead
+# concurrency guard: this watcher holds an exclusive flock on
+# target/.bench.lock around its probe and its firing run, and a held lock
+# skips the probe cycle. The lock serializes watcher instances only: a
+# test or bench sbt started by hand does not take it, so do not start one
+# while the watcher runs
 mkdir -p target
 exec 9>target/.bench.lock
 deadline=$(( $(date +%s) + 8*3600 ))
