@@ -216,10 +216,12 @@ object ConnectedComponents {
     *                caller asking for BOUNDED-round (possibly
     *                unconverged) labels always gets the loop. At ≤64 MB
     *                of sym rows the graph's diameter is ≤4M, where
-    *                pointer doubling converges in ≤ ~23 < 30 rounds, so
-    *                the fast path's fully-converged output equals the
-    *                loop's exactly (spec-asserted on chain/star/planted
-    *                shapes). */
+    *                pointer doubling converges in ≤ ~23 < 30 rounds;
+    *                the fast path's output is the fully converged
+    *                labelling (spec-asserted against the loop on
+    *                chain/star/planted shapes), whereas the loop stopped
+    *                at `maxIter` on a long path with unfavourable ids can
+    *                return unconverged labels. */
   def runCounted(edges: DataFrame, maxIter: Int = 30,
       onRound: (Int, Long, Double) => Unit = (_, _, _) => (),
       smallSolve: Option[Boolean] = None)

@@ -26,9 +26,10 @@ import graft.pipeline.Stages
   * The staged projection lives at rest, as parquet under a stage
   * directory, and every stage persists its (id-only, tiny) output, so a
   * crashed chain RESUMES from the last committed stage without
-  * re-scanning corpus text. Every hook here ([[Dedup.bandRowsFromSigs]],
-  * [[Dedup.jaccardVerifyOnShingles]],
-  * [[Decontaminate.contaminationReportOnShingles]]) takes any
+  * re-scanning corpus text. Every hook here
+  * ([[Decontaminate.contaminationReportOnShingles]],
+  * [[Dedup.nearDupPairsFromSigs]], [[Dedup.nearDupDropIds]],
+  * [[Dedup.bandRowsFromSigs]] for the store append) takes any
   * `(doc_id, …)` table, however persisted.
   *
   * Stage semantics are IDENTICAL to the standalone operators (the hooks
@@ -307,37 +308,21 @@ object CleaningPipeline {
     def exactDrops = spark.read.parquet(exactDir)
     if (upTo < 3) return None
 
-    // stage 3 — near-dup drops from the staged signatures/shingles. The
-    // drop-filter anti-joins run over the (doc_id, sig) projection only;
-    // the verify join reads the heavy shingle column straight from the
-    // staged table (candidate ids came from banding over the filtered
-    // frame, so they already exclude every dropped document) — the
-    // shingle sets never ride through an anti-join exchange, and the
-    // verify side is semi-join-reduced to the candidate population
-    // before its two heavy joins.
+    // stage 3 — near-dup drops through the shared candidates → verify
+    // builder. The drop-filter anti-joins run over the (doc_id, sig)
+    // projection only; the verify side reads the heavy shingle column
+    // straight from the staged table (candidate ids came from banding
+    // over the filtered frame, so they already exclude every dropped
+    // document) — the shingle sets never ride through an anti-join
+    // exchange.
     stage(3) {
       val sigs = staged
         .where(shCount > 0).select(col("doc_id"), col("sig"))
         .join(flagged, Seq("doc_id"), "left_anti")
         .join(exactDrops, Seq("doc_id"), "left_anti")
-      // candidate id pairs checkpointed once: the broadcast gate's count
-      // is then free, and neither the verify joins nor the CC loop
-      // re-runs the banding/candidate shuffle. The candidate-population
-      // reduction is checkpointed too, so the heavy at-rest `sh` column
-      // is scanned ONCE here instead of once per verify join side —
-      // at 20M docs that is ~9.5 GB of core-invariant disk read saved.
-      // lazy checkpoints (r8): the broadcast-gate count materializes the
-      // candidate frame (and the staged scan feeding it) in its one job;
-      // the reduced frame materializes under the verify/CC job — the
-      // former eager checkpoints each spent a dedicated job first
-      val cand = Dedup.candidatePairsFromBanded(
-          Dedup.bandRowsFromSigs(sigs, k, bands), maxBucket)
-        .localCheckpoint(eager = false)
-      val reduced = Dedup.reduceShingleSetsToPairs(
-          staged.select(col("doc_id"), col("sh")), cand,
-          broadcastIds = 2 * cand.count() <= Dedup.BroadcastIdsGuidance)
-        .localCheckpoint(eager = false)
-      val pairs = Dedup.jaccardVerifyOnShingles(reduced, cand, minJaccard)
+      val pairs = Dedup.nearDupPairsFromSigs(sigs,
+        staged.select(col("doc_id"), col("sh")), k, bands, maxBucket,
+        minJaccard)
       val (df3, rows3) = Stages.counted(Dedup.nearDupDropIds(pairs))
       df3.write.mode(SaveMode.Overwrite).parquet(nearDir)
       rows3()

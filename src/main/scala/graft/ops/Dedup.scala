@@ -54,18 +54,6 @@ object Dedup {
         i => array_join(slice(toks, i + 1, lit(n)), " ")))
       .otherwise(array().cast("array<string>"))
 
-  /** Convenience single-expression form — only for one-shot use on small
-    * inputs; hot paths must stage (see [[shinglesFromToks]]). */
-  def shingles(text: Column, n: Int): Column =
-    shinglesFromToks(split(text, " "), n)
-
-  /** k-permutation MinHash signature over a pre-staged shingle-array
-    * column: h_j(s) = xxhash64(s, j), signature element = min. One narrow
-    * projection; no UDF, no shuffle. */
-  def minhashSignatureFromShingles(sh: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(sh, s => xxhash64(s, j))))
-
   /** Single-pass MinHash signature — one tokenize pass, one hash per
     * shingle, one splitmix64 lane mix per permutation. Backed by the
     * native codegen'd [[graft.functions.MinHashSig]] expression in the
@@ -140,12 +128,6 @@ object Dedup {
       graft.functions.WordShingles(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text), n))
 
-  /** Distinct word-shingle set per document `(doc_id, sh)` — the exact
-    * representation [[jaccardVerify]] compares (and [[SignatureStore]]
-    * persists so incremental verification never refetches corpus text). */
-  private[ops] def distinctShingleSets(docs: DataFrame, shingleN: Int): DataFrame =
-    docs.select(col("doc_id"), distinctShingles(col("text"), shingleN).as("sh"))
-
   /** Per-shingle 64-bit hash of a shingle-set column: `array<string>` →
     * `array<long>` (XxHash64 inside a codegen'd `transform` HOF) — the
     * AT-REST representation of shingle sets (the cleaning chain's staged
@@ -164,14 +146,15 @@ object Dedup {
     * the raw sets,
     * while at-rest bytes drop ~2.5× (8-byte longs vs ~20-byte UTF-8
     * 3-gram strings) and every downstream `array_intersect` compares
-    * longs instead of strings. Direct (unstaged) verify paths keep raw
-    * strings: their shingle sets never rest on disk, and exactness is
-    * then unconditional. */
+    * longs instead of strings. It is the one shingle representation
+    * every verify path compares ([[jaccardVerify]],
+    * [[nearDupPairsStaged]], the cleaning chain, [[SignatureStore]]). */
   def hashShingles(sh: Column): Column = transform(sh, s => xxhash64(s))
 
   /** Distinct HASHED word-shingle set per document `(doc_id, sh)` —
-    * [[distinctShingleSets]] in the at-rest representation
-    * ([[hashShingles]]); what [[SignatureStore]] persists and probes. */
+    * [[distinctShingles]] in the at-rest representation
+    * ([[hashShingles]]); what [[jaccardVerify]] compares and
+    * [[SignatureStore]] persists and probes. */
   private[ops] def distinctShingleHashSets(docs: DataFrame,
       shingleN: Int): DataFrame =
     docs.select(col("doc_id"),
@@ -219,12 +202,6 @@ object Dedup {
     pairsFromBuckets(buckets)
   }
 
-  /** Pairs from capped buckets — exposed to BoundedCapSpec so the
-    * retired window-cap twin (which now lives in the spec) shares the
-    * exact pair-emission logic with the production aggregate path. */
-  private[ops] def pairsFromCappedBuckets(buckets: DataFrame): DataFrame =
-    pairsFromBuckets(buckets)
-
   /** `k` smallest values of a long column per group, ascending —
     * [[graft.functions.BoundedMinLongs]] as a Column. */
   private def boundedMinIds(c: Column, k: Int): Column =
@@ -233,7 +210,10 @@ object Dedup {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(c), k)
         .toAggregateExpression())
 
-  private def pairsFromBuckets(buckets: DataFrame): DataFrame =
+  /** Distinct `(id1 < id2)` pairs from capped `(…, ids)` buckets —
+    * package-private so BoundedCapSpec's retired window-cap twin shares
+    * the exact pair-emission logic with the production aggregate path. */
+  private[ops] def pairsFromBuckets(buckets: DataFrame): DataFrame =
     buckets
       .select(explode(pairsOf(col("ids"))).as("p"))
       .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
@@ -251,30 +231,33 @@ object Dedup {
       transform(slice(ids, i + 2, size(ids)),
         y => struct(x.as("id1"), y.as("id2")))))
 
-  /** Exact n-gram Jaccard verification of candidate pairs.
-    * `pairs(id1, id2)` joined twice against docs; similarity via set ops
-    * on shingle arrays (array_intersect/array_union are Catalyst HOFs). */
+  /** n-gram Jaccard verification of candidate pairs: `pairs(id1, id2)`
+    * joined twice against the documents' distinct shingle sets in the
+    * hashed representation ([[distinctShingleHashSets]] — the one every
+    * verify path compares; cardinalities, hence Jaccard values, equal
+    * the raw-string ones up to the [[hashShingles]] collision bound). */
   def jaccardVerify(
       docs: DataFrame,
       pairs: DataFrame,
       shingleN: Int = 3,
       minJaccard: Double = 0.8
   ): DataFrame =
-    jaccardVerifyOnShingles(distinctShingleSets(docs, shingleN), pairs,
+    jaccardVerifyOnShingles(distinctShingleHashSets(docs, shingleN), pairs,
       minJaccard)
 
   /** As [[jaccardVerify]], but over a pre-computed `(doc_id, sh)` distinct
     * shingle-set table — the incremental path verifies against PERSISTED
-    * old-document shingle sets without touching corpus text. */
+    * old-document shingle sets without touching corpus text. Similarity
+    * via set ops on shingle arrays (array_intersect/array_union are
+    * Catalyst HOFs). */
   def jaccardVerifyOnShingles(
       shingleSets: DataFrame,
       pairs: DataFrame,
       minJaccard: Double = 0.8
-  ): DataFrame = {
-    val withSh = shingleSets
+  ): DataFrame =
     pairs
-      .join(withSh.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(withSh.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
+      .join(shingleSets.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
+      .join(shingleSets.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
       .withColumn("jaccard",
         // guard 0/0: two sub-shingle docs have empty shingle sets, and a
         // NaN jaccard would sort ABOVE minJaccard (Spark orders NaN last),
@@ -286,54 +269,35 @@ object Dedup {
           .otherwise(lit(0.0)))
       .where(col("jaccard") >= minJaccard)
       .select(col("id1"), col("id2"), col("jaccard"))
-  }
 
-  /** Guidance bound for `broadcastIds` in
-    * [[jaccardVerifyOnShinglesReduced]]: a candidate-id set under ~4M
-    * longs builds a compact broadcast relation (tens of MB); beyond it,
-    * drop the hint and let AQE pick the semi-join strategy from runtime
-    * sizes. Callers with a materialized pair set gate on
-    * `2 * pairs.count() <= BroadcastIdsGuidance` (a free upper bound on
-    * the distinct-id count — no extra distinct job). */
-  val BroadcastIdsGuidance: Long = 4000000L
+  /** Broadcast bound for the candidate-id set in
+    * [[reduceShingleSetsToPairs]]: under ~4M longs it builds a compact
+    * broadcast relation (tens of MB); beyond it the hint is dropped and
+    * AQE picks the semi-join strategy from runtime sizes.
+    * [[nearDupPairsFromSigs]] gates on `2 * cand.count()` (a free upper
+    * bound on the distinct-id count — no extra distinct job). */
+  private val BroadcastIdsGuidance: Long = 4000000L
 
-  /** As [[jaccardVerifyOnShingles]], but the heavy shingle-set table is
-    * first REDUCED to the documents that appear in some candidate pair.
+  /** The shingle-set table REDUCED to the documents that appear in some
+    * candidate pair.
     *
-    * Why this exists: the verify step joins `pairs` against `shingleSets`
-    * twice, and without reduction BOTH joins exchange the full corpus-
-    * sized shingle arrays — at 20M docs that is 2 × ~17 GB of heavy rows
-    * through the shuffle when only the few percent of documents that LSH
-    * banding actually paired are ever matched. The semi-join keeps the
-    * heavy arrays of exactly those documents (inner joins on ids drawn
-    * from `pairs` make the reduction a semantic no-op — spec-asserted
-    * against the unreduced path), so the heavy exchange is proportional
-    * to the CANDIDATE population, not the corpus. With `broadcastIds`
-    * the reduction itself is a map-side broadcast semi-join and the
-    * corpus-sized table is never shuffled at all; with it off the ids
-    * still cut the two downstream heavy joins to candidate scale. */
-  def jaccardVerifyOnShinglesReduced(
+    * Why: the verify step joins `pairs` against `shingleSets` twice, and
+    * without reduction BOTH joins exchange the full corpus-sized shingle
+    * arrays — at 20M docs that is 2 × ~17 GB of heavy rows through the
+    * shuffle when only the few percent of documents that LSH banding
+    * actually paired are ever matched. The semi-join keeps the heavy
+    * arrays of exactly those documents (inner joins on ids drawn from
+    * `pairs` make the reduction a semantic no-op — spec-asserted against
+    * the unreduced verify for both `broadcastIds` settings), so the heavy
+    * exchange is proportional to the CANDIDATE population, not the
+    * corpus. With `broadcastIds` the reduction itself is a map-side
+    * broadcast semi-join and the corpus-sized table is never shuffled at
+    * all; with it off the ids still cut the two downstream heavy joins
+    * to candidate scale. */
+  private[ops] def reduceShingleSetsToPairs(
       shingleSets: DataFrame,
       pairs: DataFrame,
-      minJaccard: Double = 0.8,
-      broadcastIds: Boolean = true
-  ): DataFrame =
-    jaccardVerifyOnShingles(
-      reduceShingleSetsToPairs(shingleSets, pairs, broadcastIds), pairs,
-      minJaccard)
-
-  /** The candidate-population reduction itself — the reusable half of
-    * [[jaccardVerifyOnShinglesReduced]], for callers that additionally
-    * CHECKPOINT the reduced frame: the verify plan references its
-    * shingle side twice (id1 and id2), so an un-materialized reduction
-    * scans the heavy at-rest `sh` column once per side, while a
-    * checkpointed one reads it exactly once (the reduced frame is
-    * candidate-sized — bounded by 2·|pairs| rows — so materializing it
-    * is cheap next to the corpus-sized scan it saves). */
-  def reduceShingleSetsToPairs(
-      shingleSets: DataFrame,
-      pairs: DataFrame,
-      broadcastIds: Boolean = true
+      broadcastIds: Boolean
   ): DataFrame = {
     val ids = pairs.select(col("id1").as("doc_id"))
       .union(pairs.select(col("id2").as("doc_id")))
@@ -342,30 +306,66 @@ object Dedup {
     shingleSets.join(hinted, Seq("doc_id"), "left_semi")
   }
 
+  /** Verified near-dup pairs `(id1, id2, jaccard)` from pre-computed
+    * `(doc_id, sig)` signatures and `(doc_id, sh)` shingle sets — THE
+    * candidates → verify builder every MinHash near-dup path runs
+    * ([[nearDupPairsStaged]], [[CleaningPipeline.runStages]] stage 3):
+    *  1. banding ([[bandRowsFromSigs]]) and capped candidate pairs
+    *     ([[candidatePairsFromBanded]]), lazily checkpointed so neither
+    *     the verify joins nor a CC loop downstream re-runs the banding
+    *     shuffle;
+    *  2. the shingle sets reduced to the candidate population
+    *     ([[reduceShingleSetsToPairs]]), broadcast-hinted when
+    *     `2 * cand.count() <= BroadcastIdsGuidance`, and lazily
+    *     checkpointed: the verify plan references its shingle side twice
+    *     (id1 and id2), so the heavy `sh` column is then scanned once
+    *     instead of once per side (the reduced frame is candidate-sized,
+    *     bounded by 2·|pairs| rows);
+    *  3. [[jaccardVerifyOnShingles]].
+    *
+    * `sigs` must already exclude sub-shingle documents (their all-MaxValue
+    * signatures would collide into one degenerate bucket).
+    *
+    * NOT a pure plan builder: the broadcast gate's `cand.count()` runs one
+    * job at construction, which materializes the candidates (and the
+    * inputs feeding them) under their checkpoint; the reduced frame
+    * materializes under its first consumer. */
+  private[ops] def nearDupPairsFromSigs(
+      sigs: DataFrame,
+      sets: DataFrame,
+      k: Int,
+      bands: Int,
+      maxBucket: Int,
+      minJaccard: Double
+  ): DataFrame = {
+    val cand = candidatePairsFromBanded(bandRowsFromSigs(sigs, k, bands),
+        maxBucket)
+      .localCheckpoint(eager = false)
+    val reduced = reduceShingleSetsToPairs(sets, cand,
+        broadcastIds = 2 * cand.count() <= BroadcastIdsGuidance)
+      .localCheckpoint(eager = false)
+    jaccardVerifyOnShingles(reduced, cand, minJaccard)
+  }
+
   /** Verified near-dup pairs `(id1, id2, jaccard)` over ONE staged text
-    * pass — the composed candidate→verify chain of [[nearDupGroups]] /
-    * [[nearDupDedup]] in the cleaning pipeline's shape
-    * ([[CleaningPipeline.runStages]], stage 3): per-document content
-    * signature AND distinct hashed shingle set are computed in a single
-    * codegen'd projection and checkpointed, banding reads only `sig`,
-    * and verification reads the `sh` column semi-join-REDUCED to the
-    * candidate population.
+    * pass — the candidate→verify chain of [[nearDupGroups]] /
+    * [[nearDupDedup]] in the cleaning pipeline's shape: per-document
+    * content signature AND distinct hashed shingle set are computed in a
+    * single codegen'd projection and lazily checkpointed, then
+    * [[nearDupPairsFromSigs]] bands `sig` and verifies `sh`.
     *
-    * Why (guide §8 / §2.3): the previous composition re-derived its
-    * per-document features from `text` three times — the MinHash pass in
-    * [[bandedSignatures]] plus one shingle pass per side of
-    * [[jaccardVerify]]'s double join — so at corpus scale the dominant
-    * cost (the text scan + shingle expression) was paid 3×, and the two
-    * verify joins exchanged corpus-sized shingle arrays. Here text is
-    * read once; everything downstream exchanges ids, signatures, and
-    * candidate-bounded shingle sets. Shingle sets ride at rest in the
-    * hashed representation ([[hashShingles]] — cardinality arithmetic,
-    * hence Jaccard, is preserved; see its pairwise collision bound), the
-    * same representation the oracle-green kg19 chain stages.
+    * Why (guide §8 / §2.3): composing [[lshCandidatePairs]] with
+    * [[jaccardVerify]] re-derives the per-document features from `text`
+    * three times — the MinHash pass in [[bandedSignatures]] plus one
+    * shingle pass per side of the verify's double join — so at corpus
+    * scale the dominant cost (the text scan + shingle expression) is paid
+    * 3×, and the two verify joins exchange corpus-sized shingle arrays.
+    * Here text is read once; everything downstream exchanges ids,
+    * signatures, and candidate-bounded shingle sets. The output equals
+    * that composition row for row (spec-asserted).
     *
-    * All checkpoints are lazy: the broadcast-gate count materializes
-    * staged+candidates in one job, and the reduced frame materializes
-    * under its first consumer — no dedicated materialization jobs. */
+    * Runs one Spark job at construction: the broadcast gate's candidate
+    * count in [[nearDupPairsFromSigs]]. */
   def nearDupPairsStaged(
       docs: DataFrame,
       k: Int = 32,
@@ -380,15 +380,9 @@ object Dedup {
         hashShingles(distinctShingles(col("text"), shingleN)).as("sh"),
         minhashSignature(col("text"), k, shingleN).as("sig"))
       .localCheckpoint(eager = false)
-    val cand = candidatePairsFromBanded(
-        bandRowsFromSigs(staged.select(col("doc_id"), col("sig")), k, bands),
-        maxBucket)
-      .localCheckpoint(eager = false)
-    val reduced = reduceShingleSetsToPairs(
-        staged.select(col("doc_id"), col("sh")), cand,
-        broadcastIds = 2 * cand.count() <= BroadcastIdsGuidance)
-      .localCheckpoint(eager = false)
-    jaccardVerifyOnShingles(reduced, cand, minJaccard)
+    nearDupPairsFromSigs(staged.select(col("doc_id"), col("sig")),
+      staged.select(col("doc_id"), col("sh")), k, bands, maxBucket,
+      minJaccard)
   }
 
   // ---- near-dup clusters (pairs → components → representative) --------
@@ -420,6 +414,8 @@ object Dedup {
     * Jaccard verification → connected components → keep-min
     * representative. Output `(doc_id, cluster_rep, n_members)`, one row
     * per document that belongs to a near-dup cluster (singletons omitted).
+    * Runs one Spark job at construction ([[nearDupPairsStaged]]'s
+    * broadcast-gate count).
     */
   def nearDupGroups(
       docs: DataFrame,
@@ -448,7 +444,8 @@ object Dedup {
   /** Near-dup dedup as a corpus TRANSFORM: drop every clustered document
     * except its representative (min doc_id per component); singletons pass
     * through. The anti-join's right side is `(doc_id)` only — id-scale,
-    * broadcastable when the duplicate fraction is small.
+    * broadcastable when the duplicate fraction is small. Runs one Spark
+    * job at construction ([[nearDupPairsStaged]]'s broadcast-gate count).
     */
   def nearDupDedup(
       docs: DataFrame,
@@ -483,18 +480,11 @@ object Dedup {
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup candidates: equal on any of `blocks` signature blocks
-    * (standard Charikar blocking — tolerates `blocks-1` differing bits per
-    * the pigeonhole principle). `maxBucket` caps block-key bucket
-    * membership — see [[simhashCandidatesFromSigs]]. */
-  def simhashCandidates(docs: DataFrame, blocks: Int = 4,
-      maxBucket: Int = 64): DataFrame =
-    simhashCandidatesFromSigs(
-      docs.select(col("doc_id"), simhash64(col("text")).as("sig")), blocks,
-      maxBucket)
-
-  /** [[simhashCandidates]] over PRE-COMPUTED `(doc_id, sig)` signatures —
-    * the blocking + Hamming half is pure relational algebra, so a staged
+  /** SimHash near-dup candidates `(id1, id2, hamming)` over
+    * PRE-COMPUTED `(doc_id, sig)` signatures ([[simhash64]]): pairs equal
+    * on any of `blocks` signature blocks (standard Charikar blocking —
+    * tolerates `blocks-1` differing bits per the pigeonhole principle).
+    * The blocking + Hamming half is pure relational algebra, so a staged
     * signature table lets an external engine (the DuckDB oracle) verify
     * it exactly: block keys are arithmetic-shift-plus-mask, the distance
     * is `bit_count(xor(sig1, sig2))`. `doc_id` must be unique per row.
@@ -542,25 +532,22 @@ object Dedup {
         hamming64(col("sig1"), col("sig2")).as("hamming"))
   }
 
-  /** SimHash near-dup pairs: capped block-key candidates kept at Hamming
-    * distance ≤ `maxHamming` — the verification step of the SimHash
-    * family (Charikar's criterion: near-duplicates differ in few
-    * signature bits; `blocks = 4` guarantees a shared block key up to
-    * 3 differing bits, so `maxHamming ≤ blocks - 1` is exhaustive over
+  /** SimHash near-dup pairs over pre-computed `(doc_id, sig)` signatures:
+    * capped block-key candidates ([[simhashCandidatesFromSigs]]) kept at
+    * Hamming distance ≤ `maxHamming` — the verification step of the
+    * SimHash family (Charikar's criterion: near-duplicates differ in few
+    * signature bits; `blocks = 4` guarantees a shared block key up to 3
+    * differing bits, so `maxHamming ≤ blocks - 1` is exhaustive over
     * uncapped buckets). The Hamming filter is a scalar predicate on the
     * candidate rows — no extra shuffle beyond candidate generation. */
-  def simhashNearDupPairs(docs: DataFrame, blocks: Int = 4,
-      maxBucket: Int = 64, maxHamming: Int = 3): DataFrame =
-    simhashCandidates(docs, blocks, maxBucket)
-      .where(col("hamming") <= maxHamming)
-
-  /** [[simhashNearDupPairs]] over pre-computed `(doc_id, sig)`
-    * signatures (the staged/oracle form, like
-    * [[simhashCandidatesFromSigs]]). */
   def simhashNearDupPairsFromSigs(sigs: DataFrame, blocks: Int = 4,
       maxBucket: Int = 64, maxHamming: Int = 3): DataFrame =
     simhashCandidatesFromSigs(sigs, blocks, maxBucket)
       .where(col("hamming") <= maxHamming)
+
+  /** `(doc_id, sig)` SimHash signatures of a documents table. */
+  private def simhashSigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), simhash64(col("text")).as("sig"))
 
   /** SimHash near-dup CLUSTERS `(doc_id, cluster_rep, n_members)` — the
     * corpus analytic over the SimHash pair graph; identical CC tail to
@@ -569,8 +556,8 @@ object Dedup {
   def simhashGroups(docs: DataFrame, blocks: Int = 4, maxBucket: Int = 64,
       maxHamming: Int = 3): DataFrame =
     clustersFromPairs(
-      simhashNearDupPairs(docs, blocks, maxBucket, maxHamming)
-        .select(col("id1"), col("id2")))
+      simhashNearDupPairsFromSigs(simhashSigs(docs), blocks, maxBucket,
+        maxHamming).select(col("id1"), col("id2")))
 
   /** SimHash dedup as a corpus TRANSFORM: drop every clustered document
     * except its min-id representative — the SimHash twin of
@@ -579,7 +566,7 @@ object Dedup {
   def simhashDedup(docs: DataFrame, blocks: Int = 4, maxBucket: Int = 64,
       maxHamming: Int = 3): DataFrame =
     docs.join(
-      nearDupDropIds(simhashNearDupPairs(docs, blocks, maxBucket,
-        maxHamming)),
+      nearDupDropIds(simhashNearDupPairsFromSigs(simhashSigs(docs), blocks,
+        maxBucket, maxHamming)),
       Seq("doc_id"), "left_anti")
 }

@@ -31,7 +31,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * signature ([[Dedup.bandedSignatures]]), the bucket cap + pair stage is
   * the SAME code over the merged old∪batch membership
   * ([[Dedup.candidatePairsFromBanded]]), and verification uses the SAME
-  * shingle representation ([[Dedup.distinctShingleSets]]) — so
+  * shingle representation ([[Dedup.distinctShingleHashSets]]) — so
   * `probe(store, batch)` emits exactly the batch-touching subset of what
   * the batch path `jaccardVerify(lshCandidatePairs(old ∪ batch))` emits,
   * including on degenerate buckets where the cap bites (spec-asserted on

@@ -198,9 +198,9 @@ object StreamingKg {
           // keep-min representatives: stored ids are smaller than batch
           // ids by contract, so a cluster's rep is stored iff any stored
           // doc is in it — batch members drop unless they ARE the rep
-          val drops = graft.ops.Dedup.clustersFromPairs(pairs)
-            .where(col("doc_id") =!= col("cluster_rep"))
-            .select(col("doc_id"))
+          // (the component label is the min id, so the drops are the
+          // non-label nodes; no cluster sizes are needed)
+          val drops = graft.ops.Dedup.nearDupDropIds(pairs)
           val keep = b.join(drops, Seq("doc_id"), "left_anti")
             .select(col("doc_id")).localCheckpoint()
           b.join(keep, Seq("doc_id"), "left_semi")

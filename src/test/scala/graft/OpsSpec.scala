@@ -44,11 +44,15 @@ class OpsSpec extends AnyFunSuite {
 
   test("reduced jaccard verify ≡ unreduced, both broadcast settings, seeded random corpora") {
     import spark.implicits._
-    // the semi-join reduction must be a semantic no-op: the verify joins
-    // are INNER on ids drawn from the pair set, so restricting the
-    // shingle table to pair-participating docs changes nothing. Checked
-    // on mutation-heavy random corpora where candidates are plentiful,
-    // with the broadcast hint both on and off.
+    // on mutation-heavy random corpora where candidates are plentiful:
+    //  - the hashed-set verify equals the verify over RAW shingle strings
+    //    (the reference: Jaccard is cardinality arithmetic, which hashing
+    //    preserves);
+    //  - the semi-join reduction is a semantic no-op (the verify joins
+    //    are INNER on ids drawn from the pair set), broadcast hint on and
+    //    off;
+    //  - the composed one-pass builder equals the standalone operators
+    //    composed, row for row, at a biting and a loose bucket cap.
     (1 to 3).foreach { seed =>
       val rnd = new scala.util.Random(700 + seed)
       val vocab = (0 until 25).map(i => s"v$i")
@@ -66,18 +70,33 @@ class OpsSpec extends AnyFunSuite {
       }
       val d = (0 until 30 + rnd.nextInt(30)).map(i => (i.toLong, nextText()))
         .toDF("doc_id", "text")
+      val rawSets = d.select(col("doc_id"),
+        Dedup.distinctShingles(col("text"), 3).as("sh"))
       val sets = d.select(col("doc_id"),
         Dedup.hashShingles(Dedup.distinctShingles(col("text"), 3)).as("sh"))
-      val pairs = Dedup.lshCandidatePairs(d, k = 32, bands = 16,
-        shingleN = 3, maxBucket = if (rnd.nextBoolean()) 2 else 64)
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val unreduced = rows(Dedup.jaccardVerifyOnShingles(sets, pairs, 0.8))
-      assert(unreduced.nonEmpty, s"seed=$seed generated no verified pairs")
-      assert(rows(Dedup.jaccardVerifyOnShinglesReduced(
-        sets, pairs, 0.8, broadcastIds = true)) == unreduced, s"seed=$seed bcast")
-      assert(rows(Dedup.jaccardVerifyOnShinglesReduced(
-        sets, pairs, 0.8, broadcastIds = false)) == unreduced, s"seed=$seed plain")
+      Seq(2, 64).foreach { cap =>
+        val ctx = s"seed=$seed maxBucket=$cap"
+        val pairs = Dedup.lshCandidatePairs(d, k = 32, bands = 16,
+          shingleN = 3, maxBucket = cap)
+        val reference = rows(Dedup.jaccardVerifyOnShingles(rawSets, pairs, 0.8))
+        assert(reference.nonEmpty, s"$ctx generated no verified pairs")
+        val verified = rows(Dedup.jaccardVerify(d, pairs, 3, 0.8))
+        assert(verified == reference, s"$ctx hashed vs raw")
+        assert(rows(Dedup.jaccardVerifyOnShingles(sets, pairs, 0.8)) ==
+          reference, s"$ctx unreduced")
+        Seq(true, false).foreach { bc =>
+          assert(rows(Dedup.jaccardVerifyOnShingles(
+            ops.DedupInternals.reduceShingleSetsToPairs(sets, pairs, bc),
+            pairs, 0.8)) == reference, s"$ctx broadcastIds=$bc")
+        }
+        val staged = Dedup.nearDupPairsStaged(d, k = 32, bands = 16,
+          shingleN = 3, maxBucket = cap, minJaccard = 0.8).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        assert(staged.length == staged.toSet.size, s"$ctx duplicate rows")
+        assert(staged.toSet == verified, s"$ctx staged vs composed")
+      }
     }
   }
 
@@ -190,7 +209,9 @@ class OpsSpec extends AnyFunSuite {
       (1L, base),
       (2L, base.replace("tok7", "tok7x")),
       (3L, (1 to 40).map(i => s"other$i").mkString(" ")))
-    val cands = Dedup.simhashCandidates(d, blocks = 4)
+    val cands = Dedup.simhashCandidatesFromSigs(
+        d.select(col("doc_id"), Dedup.simhash64(col("text")).as("sig")),
+        blocks = 4)
       .where(col("hamming") <= 16)
       .collect().map(r => Set(r.getLong(0), r.getLong(1)))
     assert(cands.contains(Set(1L, 2L)))
@@ -423,5 +444,16 @@ class OpsSpec extends AnyFunSuite {
     assert(f("u1").features.toSeq == f("u3").features.toSeq)
     assert(f("u2").n_bytes == 0 && f("u2").byte_entropy == 0.0)
     assert(f("u1").byte_entropy > 0)
+  }
+}
+
+package ops {
+  /** The spec's handle on the package-private candidate-population
+    * reduction, so the fuzz test above covers both broadcast branches. */
+  private[graft] object DedupInternals {
+    def reduceShingleSetsToPairs(sets: org.apache.spark.sql.DataFrame,
+        pairs: org.apache.spark.sql.DataFrame,
+        broadcastIds: Boolean): org.apache.spark.sql.DataFrame =
+      Dedup.reduceShingleSetsToPairs(sets, pairs, broadcastIds)
   }
 }

@@ -173,6 +173,28 @@ class StreamingSpec extends AnyFunSuite {
       val markers = new java.io.File(store).listFiles()
         .map(_.getName).filter(_.matches("_batch_\\d+_done")).toSet
       assert(markers == Set("_batch_1_done"), markers.toString)
+
+      // micro-batch 3: a chain spanning the store and the batch — b1
+      // (301) near-dups stored doc 9 (j = 18/21), b2 (300) near-dups b1
+      // (j = 21/24) but NOT doc 9 (j = 18/24). b2 drops only through the
+      // transitive closure: its one neighbour b1 is itself dropped, and
+      // as the pair's smaller id it is no pair's larger member; 302 is
+      // fresh
+      val b1 = words("c9") + " y1 y2 y3"
+      val b2 = b1 + " y4 y5 y6"
+      val chain = Seq((9L, words("c9")), (301L, b1), (300L, b2))
+        .toDF("doc_id", "text")
+      val direct = graft.ops.Dedup.jaccardVerify(chain,
+          graft.ops.Dedup.lshCandidatePairs(chain, k = 32, bands = 16,
+            shingleN = 3, maxBucket = 1024), shingleN = 3, minJaccard = 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(direct == Set((9L, 301L), (300L, 301L)), direct.toString)
+      Seq((301L, b1), (300L, b2), (302L, words("k4")))
+        .toDF("doc_id", "text").write.mode("append").parquet(inDir)
+      q.processAllAvailable()
+      val out3 = spark.read.parquet(outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(out3 == Set(101L, 201L, 203L, 302L))
     } finally q.stop()
   }
 
